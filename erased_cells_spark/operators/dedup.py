@@ -466,6 +466,9 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     # (bound 2^16) and (b) the packed long sum (lane 3 shifted by 48) stays
     # below 2^63. The bound is ENFORCED below with raise_error — an
     # oversized doc fails loudly instead of silently corrupting lanes.
+    # Wrap safety rests on that guard alone: a non-ANSI session wraps the
+    # packed sum silently, so an edit to the lane width or count must
+    # re-derive SIMHASH_MAX_WORDS to reject every n that can carry or wrap.
     aggs = [F.expr("count(*) AS n")]
     for gi in range(16):
         terms = [

@@ -464,7 +464,7 @@ def knn_join_df(
     )
     # density-adaptive first ring (same heuristic as knn_join): skip the
     # guaranteed-empty early rounds on sparse grids; rigor is unaffected
-    density = (points_count if points_count is not None else pts.count()) / float(n * n)
+    density = points_count / float(n * n)
     rk = int(min(n, max(2, math.ceil(2.0 * math.sqrt(k / max(density, 1e-12))))))
 
     cell_h, cell_w = 180.0 / n, 360.0 / n

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import ArrayType, BooleanType, LongType
 
 from erased_cells_spark.operators.cells_expr import cell_key_expr
 from erased_cells_spark.plans.tuning import local_df
@@ -37,16 +37,46 @@ def _cell_boxes(keys: np.ndarray, res: int):
     return x0, y0, x0 + w, y0 + h
 
 
-def _segments_intersect(p0, p1, q0, q1) -> bool:
-    d = lambda a, b, c: (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
-    d1, d2 = d(q0, q1, p0), d(q0, q1, p1)
-    d3, d4 = d(p0, p1, q0), d(p0, p1, q1)
-    return ((d1 > 0) != (d2 > 0)) and ((d3 > 0) != (d4 > 0))
+_CROSS_CHUNK = 1 << 20  # max elements per broadcast block of the crossing test
+
+
+def _edges_cross_boxes(v: np.ndarray, bx0, by0, bx1, by1) -> np.ndarray:
+    """(cells,) bool: some ring edge properly crosses some cell-box edge
+    (strict orientation tests: collinear touching does not count)."""
+    # box edges q0 → q1, counter-clockwise: bottom, right, top, left
+    box = [
+        np.stack(c, axis=1)[:, :, None]  # (cells, 4, 1)
+        for c in ((bx0, bx1, bx1, bx0), (by0, by0, by1, by1),
+                  (bx1, bx1, bx0, bx0), (by0, by1, by1, by0))
+    ]
+    ex0, ey0, ex1, ey1 = v[:-1, 0], v[:-1, 1], v[1:, 0], v[1:, 1]
+    hit = np.zeros(len(bx0), dtype=bool)
+    step_e = max(1, min(len(ex0), _CROSS_CHUNK // 4))
+    step_c = max(1, _CROSS_CHUNK // (4 * step_e))
+    for c in range(0, len(bx0), step_c):
+        cs = slice(c, c + step_c)
+        q0x, q0y, q1x, q1y = (b[cs] for b in box)
+        for e in range(0, len(ex0), step_e):
+            es = slice(e, e + step_e)
+            p0x, p0y, p1x, p1y = ex0[es], ey0[es], ex1[es], ey1[es]
+            # ring-edge ends against the box edge, then box-edge ends against
+            # the ring edge: (b−a)×(c−a) per element, in one fixed op order
+            d1 = (q1x - q0x) * (p0y - q0y) - (q1y - q0y) * (p0x - q0x)
+            d2 = (q1x - q0x) * (p1y - q0y) - (q1y - q0y) * (p1x - q0x)
+            d3 = (p1x - p0x) * (q0y - p0y) - (p1y - p0y) * (q0x - p0x)
+            d4 = (p1x - p0x) * (q1y - p0y) - (p1y - p0y) * (q1x - p0x)
+            cross = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
+            hit[cs] |= cross.any(axis=(1, 2))
+    return hit
 
 
 def polygon_cover_keys(ring: np.ndarray, res: int) -> np.ndarray:
     """Grid keys at `res` of cells intersecting the polygon — a conservative
-    superset (bbox cover refined by an exact cell-box × polygon test)."""
+    superset (bbox cover refined by an exact cell-box × polygon test; at a
+    tile resolution, the tiles the ring touches). The crossing step (c) is
+    one numpy broadcast over (pending cells × 4 box edges × ring edges) in
+    blocks of ≤ _CROSS_CHUNK (~10^6) elements: cover UDFs on executors stay
+    memory-bounded on large rings."""
     x0, y0, x1, y1 = polygon_bbox(ring)
     n = np.int64(1) << np.int64(res)
     w, h = 360.0 / float(n), 180.0 / float(n)
@@ -71,23 +101,35 @@ def polygon_cover_keys(ring: np.ndarray, res: int) -> np.ndarray:
     # (c) any polygon edge crosses any cell edge (only for still-unkept cells)
     pending = np.nonzero(~keep)[0]
     if len(pending):
-        edges = list(zip(v[:-1], v[1:]))
-        for idx in pending:
-            box = [
-                ((bx0[idx], by0[idx]), (bx1[idx], by0[idx])),
-                ((bx1[idx], by0[idx]), (bx1[idx], by1[idx])),
-                ((bx1[idx], by1[idx]), (bx0[idx], by1[idx])),
-                ((bx0[idx], by1[idx]), (bx0[idx], by0[idx])),
-            ]
-            keep[idx] = any(
-                _segments_intersect(p0, p1, q0, q1) for p0, p1 in edges for q0, q1 in box
-            )
+        keep[pending] = _edges_cross_boxes(
+            v, bx0[pending], by0[pending], bx1[pending], by1[pending]
+        )
     return keys[keep]
 
 
 _COVER_CACHE: dict = {}
 _COVER_CACHE_MAX = 32  # bounded LRU: a long-lived driver serving many
 #                        polygon sets must not leak cover rows (VERDICT r3)
+
+
+def _cover_udf(op: str, res: int):
+    """pandas UDF ring → its `res` cover keys, shared by the DataFrame polygon
+    operators; an unclosed ring fails loud here, named after `op`."""
+
+    @pandas_udf(ArrayType(LongType()))
+    def cover_udf(rings: pd.Series) -> pd.Series:
+        out = []
+        for r in rings:
+            ring = np.asarray([np.asarray(v, np.float64) for v in r])
+            if len(ring) < 4 or (ring[0] != ring[-1]).any():
+                raise ValueError(
+                    f"{op}: rings must be CLOSED (first vertex repeated "
+                    f"last) with >= 3 distinct vertices; got {len(ring)} rows"
+                )
+            out.append(polygon_cover_keys(ring, res).tolist())
+        return pd.Series(out)
+
+    return cover_udf
 
 
 def polygon_cells_df(spark: SparkSession, polygons: list[dict], res: int) -> DataFrame:
@@ -175,20 +217,7 @@ def pip_join_df(
     |edges/polygon| per candidate — right for parcel/zone rings (≤ ~100
     vertices); for 10^4-vertex coastlines, pre-simplify or fall back to
     pip_join's per-batch winding UDF."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    @pandas_udf(ArrayType(LongType()))
-    def cover_udf(rings: pd.Series) -> pd.Series:
-        out = []
-        for r in rings:
-            ring = np.asarray([np.asarray(v, np.float64) for v in r])
-            if len(ring) < 4 or (ring[0] != ring[-1]).any():
-                raise ValueError(
-                    "pip_join_df: rings must be CLOSED (first vertex repeated "
-                    f"last) with >= 3 distinct vertices; got {len(ring)} rows"
-                )
-            out.append(polygon_cover_keys(ring, res).tolist())
-        return pd.Series(out)
+    cover_udf = _cover_udf("pip_join_df", res)
 
     # MULTI-RING polygons (holes): several rows may share a poly_id — an
     # outer CCW ring plus CW interior rings. The winding sum below runs over
@@ -340,8 +369,9 @@ def polygon_overlap_join(
 
     Decision rule for simple polygons — exact, no tolerance:
       overlap ⇔ some edge of A properly crosses an edge of B
-                (strict orientation tests — the _segments_intersect
-                 convention: collinear touching does not count)
+                (strict orientation tests — the convention of
+                 polygon_cover_keys' crossing step: collinear touching
+                 does not count)
               ∨ A's first vertex is inside B   (A ⊆ B containment:
                  no crossings ⇒ ALL of A's vertices are inside, so ONE
                  suffices — winding with the engine-wide half-open rule)
@@ -360,20 +390,7 @@ def polygon_overlap_join(
 
     Returns DISTINCT (id_a, id_b) overlap pairs (all candidate orderings
     the caller supplies — self-join callers filter id_a < id_b)."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    @pandas_udf(ArrayType(LongType()))
-    def cover_udf(rings: pd.Series) -> pd.Series:
-        out = []
-        for r in rings:
-            ring = np.asarray([np.asarray(v, np.float64) for v in r])
-            if len(ring) < 4 or (ring[0] != ring[-1]).any():
-                raise ValueError(
-                    "polygon_overlap_join: rings must be CLOSED with >= 3 "
-                    f"distinct vertices; got {len(ring)} rows"
-                )
-            out.append(polygon_cover_keys(ring, res).tolist())
-        return pd.Series(out)
+    cover_udf = _cover_udf("polygon_overlap_join", res)
 
     def side(df: DataFrame, tag: str):
         df = df.select(

@@ -141,6 +141,39 @@ def _tile_cell_centers(tile_key: int, res: int, tile_shift: int):
     return np.meshgrid(xs, ys)
 
 
+def _zonal_partials(
+    tiles: DataFrame, polygons: list[dict], res: int, tile_shift: int, fold, schema
+) -> DataFrame:
+    """The zonal operators' shared plan: tiles ⋈ broadcast (poly_id,
+    tile_key), then one mapInPandas calling fold(poly_id, buf, mask) per
+    pair, where mask = tile NODATA mask AND cell centre in the zone ring.
+
+    Each zone's tile keys are its polygon cover at TILE resolution
+    (res − tile_shift), not fine cells projected onto tiles: a tile holding
+    an in-zone cell centre intersects the ring, and the mask applies the
+    exact centre-in-ring test. The pairs are driver-side metadata, so they
+    travel as an Arrow LocalRelation (no Python-worker tasks)."""
+    rows = [
+        (int(p["poly_id"]), int(t))
+        for p in polygons
+        for t in polygon_cover_keys(p["ring"], res - tile_shift).tolist()
+    ]
+    ztiles = local_df(tiles.sparkSession, rows, "poly_id INT, tile_key BIGINT")
+    rings = {int(p["poly_id"]): np.asarray(p["ring"], np.float64) for p in polygons}
+
+    def partials(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = []
+        for r in pdf.itertuples(index=False):
+            buf = CellBuffer.from_bytes(r.data, CellType.parse(r.cell_type))
+            gx, gy = _tile_cell_centers(int(r.tile_key), res, tile_shift)
+            zone = points_in_ring(gx.ravel(), gy.ravel(), rings[int(r.poly_id)])
+            out.extend(fold(int(r.poly_id), buf, Mask(Mask.from_bytes(r.mask).data & zone)))
+        return pd.DataFrame(out, columns=schema.names)
+
+    cand = tiles.join(F.broadcast(ztiles), "tile_key")
+    return cand.mapInPandas(lambda it: (partials(pdf) for pdf in it), schema)
+
+
 def zonal_stats(
     tiles: DataFrame,
     polygons: list[dict],
@@ -149,50 +182,21 @@ def zonal_stats(
 ) -> DataFrame:
     """Zonal min/max/mean/sum/count of a tiled raster under each polygon.
     Zone membership of a cell = its CENTER in the polygon (one convention,
-    shared with the oracle)."""
-    spark = tiles.sparkSession
-    tn_shift = tile_shift
-    # zone → candidate tile keys (driver-side cover, broadcast join)
-    rows = []
-    for p in polygons:
-        fine = polygon_cover_keys(p["ring"], res)
-        n = np.int64(1) << np.int64(res)
-        tn = np.int64(1) << np.int64(res - tile_shift)
-        iy, ix = np.divmod(fine, n)
-        tkeys = np.unique((iy >> tn_shift) * tn + (ix >> tn_shift))
-        rows.extend((int(p["poly_id"]), int(t)) for t in tkeys.tolist())
-    # Arrow-backed LocalRelation (not a pickled Python RDD): the cover list
-    # is driver-side metadata; the RDD form scheduled Python-worker tasks
-    # just to broadcast a few hundred pairs
-    ztiles = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["poly_id", "tile_key"]),
-        "poly_id INT, tile_key BIGINT",
-    )
-    cand = tiles.join(F.broadcast(ztiles), "tile_key")
+    shared with the oracle). Candidate (zone, tile) pairs come from the
+    polygon cover at tile grain, and the exact centre-in-ring test runs
+    per (tile, zone) in the pandas kernel (_zonal_partials)."""
 
-    rings = {int(p["poly_id"]): np.asarray(p["ring"], np.float64) for p in polygons}
+    def fold(poly_id: int, buf: CellBuffer, mask: Mask) -> list[dict]:
+        m = MaskedCellBuffer(buf, mask)
+        d, _ = m.counts()
+        if d == 0:
+            return []
+        lo, hi = m.min_max()  # mask-aware reference kernel
+        s = float(buf.data.astype(np.float64)[mask.data].sum())
+        return [{"poly_id": poly_id, "p_min": float(lo.v), "p_max": float(hi.v),
+                 "p_sum": s, "p_cnt": int(d)}]
 
-    def partials(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for r in pdf.itertuples(index=False):
-            ring = rings[int(r.poly_id)]
-            buf = CellBuffer.from_bytes(r.data, CellType.parse(r.cell_type))
-            tile_mask = Mask.from_bytes(r.mask)
-            gx, gy = _tile_cell_centers(int(r.tile_key), res, tile_shift)
-            zone = points_in_ring(gx.ravel(), gy.ravel(), ring)
-            m = MaskedCellBuffer(buf, Mask(tile_mask.data & zone))  # mask AND
-            d, _ = m.counts()
-            if d == 0:
-                continue
-            lo, hi = m.min_max()  # mask-aware reference kernel
-            s = float(buf.data.astype(np.float64)[m.mask.data].sum())
-            out.append(
-                {"poly_id": int(r.poly_id), "p_min": float(lo.v), "p_max": float(hi.v),
-                 "p_sum": s, "p_cnt": int(d)}
-            )
-        return pd.DataFrame(out, columns=["poly_id", "p_min", "p_max", "p_sum", "p_cnt"])
-
-    part = cand.mapInPandas(lambda it: (partials(pdf) for pdf in it), PARTIAL_SCHEMA)
+    part = _zonal_partials(tiles, polygons, res, tile_shift, fold, PARTIAL_SCHEMA)
     return (
         part.groupBy("poly_id")
         .agg(
@@ -511,46 +515,21 @@ def zonal_histogram(
     kernels (mask AND between tile NODATA and zone), so only data cells
     count.
 
-    Plan shape (identical to zonal_stats): broadcast (poly_id, tile_key)
-    cover join, one mapInPandas computing per-(tile, zone) np.unique
-    partials — each partial is at most |distinct values in tile| rows, so
+    Plan shape (identical to zonal_stats, _zonal_partials): broadcast
+    tile-grain (poly_id, tile_key) join, one mapInPandas computing np.unique
+    partials per (tile, zone) — each partial is at most |distinct values in tile| rows, so
     the shuffle carries histograms, never cells — then one groupBy
     (poly_id, value) final sum. Returns (poly_id, cell_value, n_cells)
     ordered by (poly_id, cell_value)."""
-    spark = tiles.sparkSession
-    rows = []
-    for p in polygons:
-        fine = polygon_cover_keys(p["ring"], res)
-        n = np.int64(1) << np.int64(res)
-        tn = np.int64(1) << np.int64(res - tile_shift)
-        iy, ix = np.divmod(fine, n)
-        tkeys = np.unique((iy >> tile_shift) * tn + (ix >> tile_shift))
-        rows.extend((int(p["poly_id"]), int(t)) for t in tkeys.tolist())
-    ztiles = local_df(spark, rows, "poly_id INT, tile_key BIGINT")
-    cand = tiles.join(F.broadcast(ztiles), "tile_key")
 
-    rings = {int(p["poly_id"]): np.asarray(p["ring"], np.float64) for p in polygons}
+    def fold(poly_id: int, buf: CellBuffer, mask: Mask) -> list[dict]:
+        uniq, cnt = np.unique(buf.data[mask.data], return_counts=True)
+        return [
+            {"poly_id": poly_id, "cell_value": int(v), "n_cells": int(c)}
+            for v, c in zip(uniq.tolist(), cnt.tolist())
+        ]
 
-    def partials(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for r in pdf.itertuples(index=False):
-            ring = rings[int(r.poly_id)]
-            buf = CellBuffer.from_bytes(r.data, CellType.parse(r.cell_type))
-            tile_mask = Mask.from_bytes(r.mask)
-            gx, gy = _tile_cell_centers(int(r.tile_key), res, tile_shift)
-            zone = points_in_ring(gx.ravel(), gy.ravel(), ring)
-            m = Mask(tile_mask.data & zone)  # mask AND, reference convention
-            vals = buf.data[m.data]
-            if vals.size == 0:
-                continue
-            uniq, cnt = np.unique(vals, return_counts=True)
-            out.extend(
-                {"poly_id": int(r.poly_id), "cell_value": int(v), "n_cells": int(c)}
-                for v, c in zip(uniq.tolist(), cnt.tolist())
-            )
-        return pd.DataFrame(out, columns=["poly_id", "cell_value", "n_cells"])
-
-    part = cand.mapInPandas(lambda it: (partials(pdf) for pdf in it), HIST_PARTIAL_SCHEMA)
+    part = _zonal_partials(tiles, polygons, res, tile_shift, fold, HIST_PARTIAL_SCHEMA)
     return (
         part.groupBy("poly_id", "cell_value")
         .agg(F.sum("n_cells").alias("n_cells"))

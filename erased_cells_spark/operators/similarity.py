@@ -1,7 +1,8 @@
 """Similarity search over an embedding column (array<float>).
 
-- brute-force cosine top-k: builtin-only (zip_with/aggregate fold — stays in
-  codegen; no Python). The correctness baseline.
+- brute-force cosine top-k: broadcast cross join scored by one Arrow-batched
+  pandas UDF (_cosine_kernel, the bit-identical numpy twin of the builtin
+  fold cosine_expr). The correctness baseline.
 - LSH-bucketed ANN: random-hyperplane signatures bucket the vectors; queries
   probe their own + neighboring buckets (multi-probe by sign-flip), rerank
   exactly within the probed set. The scale path: bucket join instead of

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from erased_cells_spark.operators.cells_expr import cell_key_np
 from erased_cells_spark.operators.knn import knn_join, knn_np
-from erased_cells_spark.operators.raster import rasterize_points, zonal_stats
+from erased_cells_spark.operators.raster import rasterize_points, zonal_histogram, zonal_stats
 from erased_cells_spark.pipeline import geocoded_pages
 from erased_cells_spark.sources.pages import generate_pages
 from erased_cells_spark.spatial.geom import make_polygon_fixtures, points_in_ring
@@ -103,6 +103,30 @@ class TestRasterZonal:
             assert g.z_sum == pytest.approx(sm)
             assert g.z_count == ct
             assert g.z_mean == pytest.approx(mean)
+
+    def test_zonal_rows_do_not_depend_on_arrow(self, spark, pts):
+        """The (zone, tile) candidates are a driver-built LocalRelation; an
+        Arrow-off session must plan the same rows (no float-widened ids)."""
+        polys = make_polygon_fixtures(32, seed=7)
+        tiles = rasterize_points(pts, res=RES, tile_shift=SHIFT).cache()
+
+        def run():
+            return (
+                zonal_stats(tiles, polys, res=RES, tile_shift=SHIFT).collect(),
+                zonal_histogram(tiles, polys, res=RES, tile_shift=SHIFT).collect(),
+            )
+
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        prev = spark.conf.get(key)
+        arrow_on = run()
+        spark.conf.set(key, "false")
+        try:
+            arrow_off = run()
+        finally:
+            spark.conf.set(key, prev)
+            tiles.unpersist()
+        assert arrow_on[0] and arrow_on[1]
+        assert arrow_off == arrow_on
 
 
 class TestRingKeys:
