@@ -224,7 +224,7 @@ def main() -> None:
     # Raw laps + one-off comparison detail go to a SIDE FILE, not stdout:
     # r5's inline query_laps pushed the one-line JSON past the driver's
     # stdout tail window and the artifact parsed as null (VERDICT r5 #1).
-    # The final printed line stays compact — medians, control, scaling.
+    # The final printed line stays compact — medians and control.
     side = {
         "timing_protocol": "per-query median of 3 consecutive laps",
         "query_laps": query_laps,
@@ -254,11 +254,6 @@ def main() -> None:
             "loadavg_1m_start_end": [round(load_start, 2), round(os.getloadavg()[0], 2)],
             "flagship_pages": fl_rows,
             "flagship_rows_per_sec": round(rows_per_sec, 1),
-            "scaling": "N->4N efficiency 1.004 local-cluster (1->4 exec x 2 "
-            "cores) and 1.040 single-JVM (local[2]->local[8]), both PASS "
-            ">=0.8 at 64M pages, re-measured on r7 code (r6: 0.934/0.961); "
-            "8->32-thread single-JVM hits the one-memory-bus ceiling - "
-            "analysis+controls in BENCH.md (tools/scaling_bench.py)",
         },
     }
     print(json.dumps(out))

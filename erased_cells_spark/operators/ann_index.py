@@ -117,11 +117,6 @@ class AnnIndex:
         self.model_path = os.path.join(path, "model.json")
         self.last_probe_scan: dict | None = None
 
-    def _has_postings(self) -> bool:
-        """Indexes built before the postings layout serve LSH via the
-        legacy full-scan path; anything built/refreshed since has them."""
-        return os.path.exists(os.path.join(self.postings.path, "CURRENT"))
-
     # ------------------------------------------------------------- model --
     def exists(self) -> bool:
         return os.path.exists(self.model_path)
@@ -231,13 +226,6 @@ class AnnIndex:
         # embedding rides along (n_tables copies — 1 for the registered
         # index): reranking then never re-opens the main index, the same
         # space-for-locality trade every inverted file makes.
-        if batch != 0 and not self._has_postings():
-            # refresh over a pre-postings index: writing postings for the
-            # NEW batch only would leave the table incomplete (batch 0
-            # missing) and lsh_topk would silently probe a partial corpus —
-            # keep such indexes on the legacy serve path entirely
-            df.unpersist()
-            return
         n_planes = int(model["n_planes"])
         shift = max(0, n_planes - 6)
         post = (
@@ -279,10 +267,9 @@ class AnnIndex:
         n_del = 0
         if deleted.take(1):
             n_del = self.table.delete_keys(spark, deleted, "vec_id", scope="past")
-            if self._has_postings():
-                # the postings mirror the index rows — takedowns must hide
-                # the same vec_ids there (same scope='past' discipline)
-                self.postings.delete_keys(spark, deleted, "vec_id", scope="past")
+            # the postings mirror the index rows — takedowns must hide the
+            # same vec_ids there (same scope='past' discipline)
+            self.postings.delete_keys(spark, deleted, "vec_id", scope="past")
         appended = ch["appended"]
         n_app = 0
         if appended.take(1):
@@ -416,9 +403,11 @@ class AnnIndex:
         probed bucket groups (zone maps — `last_probe_scan` proves the
         pruning, the same physical-inverted-file discipline as ivf_topk);
         exact cosine reranks inside the probed set — same flip masks and
-        tie conventions as similarity.ann_lsh_topk. Indexes built before
-        the postings layout fall back to the legacy full-scan + posexplode
-        path (identical results, no pruning)."""
+        tie conventions as similarity.ann_lsh_topk."""
+        if self.postings._current_id() == 0:
+            raise ValueError(
+                f"AnnIndex at {self.path} has no LSH postings table — rebuild the index"
+            )
         model = self.model
         cent, cb, planes = self._arrays(model)
         n_tables, n_planes, _ = planes.shape
@@ -443,21 +432,16 @@ class AnnIndex:
             F.col(q_id_col).alias("q_id"),
             F.col(q_vec_col).cast("array<double>").alias("qv"),
         )
-        if self._has_postings():
-            tbls = sorted({t for _, t, _ in probes})
-            buckets = sorted({b for _, _, b in probes})
-            e = self.postings.read(
-                spark, where=[("tbl", "in", tbls), ("bucket", "in", buckets)]
-            ).select("vec_id", "embedding", "tbl", "bucket")
-            self.last_probe_scan = {
-                "buckets_probed": len(buckets),
-                "partitions_total": self.postings.last_scan["partitions_total"],
-                "partitions_read": self.postings.last_scan["partitions_read"],
-            }
-        else:
-            e = self.df(spark).select(
-                "vec_id", "embedding", F.posexplode("sigs").alias("tbl", "bucket")
-            )
+        tbls = sorted({t for _, t, _ in probes})
+        buckets = sorted({b for _, _, b in probes})
+        e = self.postings.read(
+            spark, where=[("tbl", "in", tbls), ("bucket", "in", buckets)]
+        ).select("vec_id", "embedding", "tbl", "bucket")
+        self.last_probe_scan = {
+            "buckets_probed": len(buckets),
+            "partitions_total": self.postings.last_scan["partitions_total"],
+            "partitions_read": self.postings.last_scan["partitions_read"],
+        }
         cand = (
             e.join(F.broadcast(probe_df), ["tbl", "bucket"])
             .join(F.broadcast(qv_df), "q_id")

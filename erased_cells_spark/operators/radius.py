@@ -4,9 +4,8 @@ lat-band x wrap-aware lon-bucket equi-join — no cross join, no per-query
 driver state, and BOTH sides data-scaled.
 
 Complements the fixed-query-side radius join (queries.radius_join_docs,
-whose query set is broadcast-small) the way knn_join complements knn_docs:
-this is the variant a 100 TB corpus runs against itself ("every page within
-R km of another page"). Reference parity: the reference has no spatial
+whose query set is broadcast-small): this is the variant a 100 TB corpus
+runs against itself ("every page within R km of another page"). Reference parity: the reference has no spatial
 join at all (it is a cell-kernel crate); this row is mandated by the north
 rule's PIP/kNN/spatial-join family (BASELINE.json north_star).
 

@@ -47,20 +47,30 @@ def _cosine_kernel(va: pd.Series, vb: pd.Series) -> pd.Series:
     Verified: zero differing doubles across the full 2M-pair all-pairs
     cross join at sf0.1, so rounded rankings cannot diverge either.
     Measured 2.7x faster than the fold at 2M pairs (Arrow transfer bound);
-    the gap widens with candidate volume."""
-    if len(va) == 0:
-        return pd.Series([], dtype="float64")
-    a = np.vstack(va.to_numpy())
-    b = np.vstack(vb.to_numpy())
-    n, d = a.shape
-    dot = np.zeros(n)
-    na = np.zeros(n)
-    nb = np.zeros(n)
-    for i in range(d):  # left-to-right: replicates the sequential JVM fold
-        dot += a[:, i] * b[:, i]
-        na += a[:, i] * a[:, i]
-        nb += b[:, i] * b[:, i]
-    return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
+    the gap widens with candidate volume.
+
+    Input contract, as cosine_expr: a pair with a NULL vector or vectors of
+    different lengths scores NULL. Rows are folded in groups of equal
+    length, so a batch may mix dimensions."""
+    av, bv = va.to_numpy(), vb.to_numpy()
+    dims = np.array(
+        [-1 if x is None or y is None or len(x) != len(y) else len(x) for x, y in zip(av, bv)],
+        dtype=np.int64,
+    )
+    out = np.full(len(dims), np.nan)  # NaN leaves the UDF as NULL
+    for d in np.unique(dims[dims >= 0]):
+        rows = np.flatnonzero(dims == d)
+        a = np.vstack(av[rows]).reshape(len(rows), d)
+        b = np.vstack(bv[rows]).reshape(len(rows), d)
+        dot = np.zeros(len(rows))
+        na = np.zeros(len(rows))
+        nb = np.zeros(len(rows))
+        for i in range(d):  # left-to-right: replicates the sequential JVM fold
+            dot += a[:, i] * b[:, i]
+            na += a[:, i] * a[:, i]
+            nb += b[:, i] * b[:, i]
+        out[rows] = dot / (np.sqrt(na) * np.sqrt(nb))
+    return pd.Series(out)
 
 
 cosine_udf = pandas_udf(_cosine_kernel, DoubleType())

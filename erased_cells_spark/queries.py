@@ -27,7 +27,7 @@ from erased_cells_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from erased_cells_spark.operators.knn import knn_join
+from erased_cells_spark.operators.knn import knn_join_df
 from erased_cells_spark.operators.pip import pip_join
 from erased_cells_spark.operators.raster import rasterize_points, zonal_stats
 from erased_cells_spark.plans.tuning import local_df
@@ -1816,7 +1816,12 @@ SELECT q_id, nn_id, rnk FROM (
 )
 def knn_docs(spark, sf_dir):
     p = _doc_points(spark, sf_dir)
-    out = knn_join(p, _KNN_QUERIES, k=5, res=7, id_col="doc_id")
+    q = local_df(
+        spark,
+        [(q["q_id"], q["lon"], q["lat"]) for q in _KNN_QUERIES],
+        "q_id INT, q_lon DOUBLE, q_lat DOUBLE",
+    )
+    out = knn_join_df(p, q, k=5, res=7, id_col="doc_id")
     return out.select("q_id", "nn_id", F.col("rank").cast("long").alias("rnk")).orderBy("q_id", "rnk")
 
 
@@ -1843,12 +1848,10 @@ SELECT q_id, nn_id, rnk FROM (
 def knn_join_docs(spark, sf_dir):
     """kNN JOIN with a DATAFRAME query side (VERDICT r3 item 1): 3 nearest
     docs for EVERY 10th document — the query count GROWS with the data (50
-    at sf0.01, 500 at sf0.1), which the driver-state `knn_join` cannot
-    absorb; knn_join_df keeps all per-query ring state in DataFrame columns
-    and the driver loop iterates only the O(log grid) rounds. Self-match
-    (dist 0) ranks first by construction, same as the brute-force oracle."""
-    from erased_cells_spark.operators.knn import knn_join_df
-
+    at sf0.01, 500 at sf0.1); knn_join_df keeps all per-query ring state in
+    DataFrame columns and the driver loop iterates only the O(log grid)
+    rounds, so the round count does not grow with it. Self-match (dist 0)
+    ranks first by construction, same as the brute-force oracle."""
     p = _doc_points(spark, sf_dir)
     q = p.filter(F.col("doc_id") % 10 == 0).select(
         F.col("doc_id").alias("q_id"),

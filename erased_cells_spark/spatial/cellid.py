@@ -163,12 +163,3 @@ def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int, limit: int = 4096) 
     ys = np.arange(int(iy0), int(iy1) + 1, dtype=np.uint64)
     gx, gy = np.meshgrid(xs, ys)
     return encode_xy(gx.ravel(), gy.ravel(), res)
-
-
-def res_for_extent(extent_deg: float, target_cells: float = 16.0) -> int:
-    """Pick the finest res whose cell width keeps a cover of `extent_deg`
-    under ~target_cells per axis."""
-    res = 0
-    while res < MAX_RES and 360.0 / (1 << (res + 1)) * target_cells > extent_deg:
-        res += 1
-    return res

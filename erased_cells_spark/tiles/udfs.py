@@ -14,7 +14,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     BinaryType,
@@ -25,7 +24,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from erased_cells_spark.cells import CellType, NoData
+from erased_cells_spark.cells import CellType
 from erased_cells_spark.tiles.schema import tile_to_masked_buffer
 
 STATS_SCHEMA = StructType(
@@ -163,42 +162,3 @@ def tile_neg(cell_type: Column, data: Column, mask: Column) -> Column:
         return pd.DataFrame({"cell_type": out_c, "data": out_d, "mask": out_m})
 
     return _neg(cell_type, data, mask)
-
-
-def tile_to_vec_with_nodata(
-    cell_type: Column, data: Column, mask: Column, target: str, nodata_mode: str = "default", nodata_value: float | None = None
-) -> Column:
-    """Egress: convert + overwrite masked lanes with the sentinel → BINARY."""
-    target_ct = CellType.parse(target)
-
-    @pandas_udf(BinaryType())
-    def _egress(cts: pd.Series, datas: pd.Series, masks: pd.Series) -> pd.Series:
-        nd = NoData(nodata_mode, target_ct, nodata_value)
-        out = []
-        for mb in _iter_tiles(cts, datas, masks):
-            out.append(mb.to_vec_with_nodata(target_ct, nd).tobytes())
-        return pd.Series(out)
-
-    return _egress(cell_type, data, mask)
-
-
-def ndvi_expr(df, nir_prefix: str = "nir", red_prefix: str = "red"):
-    """(nir - red) / (nir + red) over joined tile columns — the reference's
-    own e2e pipeline (src/gdal/rasterband.rs:137-191) as a composed plan."""
-    num = tile_binop(
-        "sub",
-        F.col(f"{nir_prefix}_cell_type"), F.col(f"{nir_prefix}_data"), F.col(f"{nir_prefix}_mask"),
-        F.col(f"{red_prefix}_cell_type"), F.col(f"{red_prefix}_data"), F.col(f"{red_prefix}_mask"),
-    ).alias("num")
-    den = tile_binop(
-        "add",
-        F.col(f"{nir_prefix}_cell_type"), F.col(f"{nir_prefix}_data"), F.col(f"{nir_prefix}_mask"),
-        F.col(f"{red_prefix}_cell_type"), F.col(f"{red_prefix}_data"), F.col(f"{red_prefix}_mask"),
-    ).alias("den")
-    step = df.select("*", num, den)
-    ndvi = tile_binop(
-        "div",
-        F.col("num.cell_type"), F.col("num.data"), F.col("num.mask"),
-        F.col("den.cell_type"), F.col("den.data"), F.col("den.mask"),
-    ).alias("ndvi")
-    return step.select("*", ndvi)

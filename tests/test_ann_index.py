@@ -224,7 +224,7 @@ class TestLshPostings:
 
     def test_refresh_maintains_postings(self, spark, built, tmp_path):
         # append + delete window: LSH serving from the refreshed postings
-        # must equal a rebuilt index (and the legacy full-scan path)
+        # must equal a rebuilt index
         idx, src, e, cent, cb, vecs = built
         new = make_vecs(30, seed=21) + 0.05
         df = emb_df(spark, range(200, 230), new).withColumn(
@@ -241,16 +241,11 @@ class TestLshPostings:
         ).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
-    def test_pre_postings_index_stays_on_legacy_path(self, spark, built):
-        # simulate an r7-era index: postings dir removed after build
+    def test_missing_postings_asks_for_rebuild(self, spark, built):
         import shutil
 
         idx, src, e, cent, cb, vecs = built
         shutil.rmtree(idx.postings.path)
-        assert not idx._has_postings()
         q = queries_df(spark, [0, 1], vecs[:2])
-        got = idx.lsh_topk(spark, q, k=5, probe_depth=2).collect()
-        want = ann_lsh_topk(
-            e, q, k=5, dim=DIM, n_planes=4, probe_depth=2
-        ).collect()
-        assert [tuple(r) for r in got] == [tuple(r) for r in want]
+        with pytest.raises(ValueError, match="rebuild the index"):
+            idx.lsh_topk(spark, q, k=5, probe_depth=2)

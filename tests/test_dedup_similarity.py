@@ -16,8 +16,10 @@ from erased_cells_spark.operators.dedup import (
 )
 from erased_cells_spark.operators.similarity import (
     ann_lsh_topk,
+    cosine_expr,
     cosine_topk,
     cosine_topk_np,
+    cosine_udf,
 )
 from erased_cells_spark.sources.pages import gen_batch
 
@@ -132,6 +134,42 @@ class TestSimilarity:
             )
         ]
         assert got == want
+
+    def test_cosine_topk_null_and_ragged_rows_score_null(self, spark):
+        """NULL vectors and pairs of different lengths score NULL, as the
+        builtin cosine_expr does; valid rows in the same Arrow batch keep
+        the fold's exact doubles, whatever their dimension."""
+        emb = spark.createDataFrame(
+            [
+                (1, [1.0, 0.0, 0.0]),
+                (2, [0.6, 0.8, 0.0]),
+                (3, None),
+                (4, [1.0, 0.0]),
+                (5, [0.3, 0.1, 0.7]),
+            ],
+            "vec_id LONG, embedding ARRAY<DOUBLE>",
+        ).coalesce(1)  # one batch mixes valid, NULL and ragged rows
+        queries = spark.createDataFrame(
+            [(0, [0.2, 0.9, 0.4]), (1, [0.0, 1.0])], "q_id LONG, q_vec ARRAY<DOUBLE>"
+        )
+        got = [tuple(r) for r in cosine_topk(emb, queries, k=5).collect()]
+        scored = emb.crossJoin(queries).select(
+            "q_id", "vec_id",
+            cosine_udf(F.col("embedding"), F.col("q_vec")).alias("udf"),
+            cosine_expr(F.col("embedding"), F.col("q_vec")).alias("fold"),
+        )
+        pairs = {(r.q_id, r.vec_id): (r.udf, r.fold) for r in scored.collect()}
+        assert len(pairs) == 10
+        for key, (udf, fold) in pairs.items():
+            assert udf == fold, key  # NULL == NULL via None, else bit-equal
+        assert [k for k, (u, _) in sorted(pairs.items()) if u is None] == [
+            (0, 3), (0, 4), (1, 1), (1, 2), (1, 3), (1, 5)
+        ]
+        # NULL scores rank after every score, ties by id
+        assert [(q, nn, rk) for q, nn, rk, _ in got] == [
+            (0, 2, 1), (0, 5, 2), (0, 1, 3), (0, 3, 4), (0, 4, 5),
+            (1, 4, 1), (1, 1, 2), (1, 2, 3), (1, 3, 4), (1, 5, 5),
+        ]
 
     def test_ann_lsh_recall(self, spark, emb, emb_pd):
         vecs, ids = emb_pd

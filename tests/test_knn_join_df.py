@@ -17,6 +17,7 @@ from erased_cells_spark.sources.pages import generate_pages
 
 SEED = 42
 N = 4000
+JOBS_KNN_DOCS_SHAPE = 16  # contract 6, three rounds of 3, final collect 1
 
 
 @pytest.fixture(scope="module")
@@ -224,6 +225,45 @@ class TestKnnJoinDf:
         small = run(25)
         big = run(200)
         assert big <= small + 4, (small, big)
+
+
+class TestKnnDocsShape:
+    def test_local_query_side_arrow_off(self, spark, pts, pts_local):
+        """knn_docs' call shape — a few literal queries with INT ids as a
+        local_df — with Arrow off, Spark's default session setting:
+        exact against knn_np, and within a fixed Spark job budget (the
+        input contract job, one materializing job per round plus its
+        shuffle stages, the final collect), so an added driver round trip
+        fails here."""
+        from erased_cells_spark.plans.tuning import local_df
+        from erased_cells_spark.queries import _KNN_QUERIES
+
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        sc = spark.sparkContext
+        sc.setJobGroup("knn_docs_shape", "knn_docs_shape")
+        try:
+            qdf = local_df(
+                spark,
+                [(q["q_id"], q["lon"], q["lat"]) for q in _KNN_QUERIES],
+                "q_id INT, q_lon DOUBLE, q_lat DOUBLE",
+            )
+            rows = knn_join_df(pts, qdf, k=5, res=7).collect()
+        finally:
+            sc.setJobGroup(None, None)
+            spark.conf.set(key, prev)
+        jobs = len(sc.statusTracker().getJobIdsForGroup("knn_docs_shape"))
+        want = knn_np(
+            pts_local.lon.to_numpy(), pts_local.lat.to_numpy(),
+            pts_local.url.tolist(), _KNN_QUERIES, k=5,
+        )
+        got = {(r.q_id, r.rank): (r.nn_id, r.dist_km) for r in rows}
+        assert len(got) == len(want)
+        for qid, nn_id, dist, rank in want:
+            g_id, g_dist = got[(qid, rank)]
+            assert g_id == nn_id and g_dist == pytest.approx(dist, rel=1e-9, abs=1e-9)
+        assert jobs <= JOBS_KNN_DOCS_SHAPE, jobs
 
 
 class TestAnnulusBlockRanges:

@@ -1,12 +1,11 @@
-"""kNN ring-expansion vs brute-force haversine; rasterize + zonal stats vs
-first-principles numpy oracle (FIXTURES.md F6, SURVEY.md §7.5)."""
+"""Rasterize + zonal stats vs first-principles numpy oracle, and the kNN
+ring-key generator vs a masked meshgrid (FIXTURES.md F6, SURVEY.md §7.5)."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from erased_cells_spark.operators.cells_expr import cell_key_np
-from erased_cells_spark.operators.knn import knn_join, knn_np
 from erased_cells_spark.operators.raster import rasterize_points, zonal_histogram, zonal_stats
 from erased_cells_spark.pipeline import geocoded_pages
 from erased_cells_spark.sources.pages import generate_pages
@@ -26,38 +25,6 @@ def pts(spark):
 @pytest.fixture(scope="module")
 def pts_local(pts):
     return pts.toPandas()
-
-
-def make_queries(pts_local, n_grid=24):
-    """FIXTURES F6: seeded points in the data bbox + empty-space points +
-    exact page-location duplicates (distance-0 ties)."""
-    rng = np.random.default_rng(99)
-    qs = []
-    for i in range(n_grid):
-        qs.append({"q_id": i, "lon": float(rng.uniform(-170, 170)), "lat": float(rng.uniform(-80, 80))})
-    # duplicates of real page locations → 0-distance ties
-    for j, row in enumerate(pts_local.head(4).itertuples(index=False)):
-        qs.append({"q_id": n_grid + j, "lon": float(row.lon), "lat": float(row.lat)})
-    # pole-adjacent (stresses the lon-escape bound)
-    qs.append({"q_id": n_grid + 4, "lon": 10.0, "lat": 84.5})
-    return qs
-
-
-class TestKNN:
-    def test_knn_matches_bruteforce(self, spark, pts, pts_local):
-        queries = make_queries(pts_local)
-        got = knn_join(pts, queries, k=5, res=7)
-        got_rows = {(r.q_id, r.rank): (r.nn_id, r.dist_km) for r in got.collect()}
-
-        want = knn_np(
-            pts_local.lon.to_numpy(), pts_local.lat.to_numpy(),
-            pts_local.url.tolist(), queries, k=5,
-        )
-        assert len(got_rows) == len(want)
-        for qid, nn_id, dist, rank in want:
-            g_id, g_dist = got_rows[(qid, rank)]
-            assert g_id == nn_id, (qid, rank)
-            assert g_dist == pytest.approx(dist, rel=1e-9, abs=1e-9)
 
 
 class TestRasterZonal:

@@ -70,7 +70,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
         "  equi-joins on l_orderkey with the supplier inequality as a residual",
         "  condition; q13's right-side filter stays inside the LeftOuter join",
         "  (both plan-asserted in tests/test_plans.py).",
-        "- `knn_docs`, `dup_clusters`, `media_features`, `media_phash_dups`,",
+        "- `knn_docs`, `knn_join_docs`, `dup_clusters`, `media_features`, `media_phash_dups`,",
         "  and the LSH family profiles look short because their upstream work",
         "  sits behind localCheckpoint / mapInPandas boundaries; their",
         "  pre-checkpoint plans are asserted in tests/test_plans.py and the",
