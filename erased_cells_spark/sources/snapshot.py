@@ -65,7 +65,11 @@ from pyspark.sql.functions import coalesce as F_coalesce
 from pyspark.sql.functions import col as F_col
 from pyspark.sql.functions import count as F_count
 from pyspark.sql.functions import expr as F_expr
+from pyspark.sql.functions import first as F_first
 from pyspark.sql.functions import lit as F_lit
+from pyspark.sql.functions import max as F_max
+from pyspark.sql.functions import sum as F_sum
+from pyspark.sql.functions import when as F_when
 
 
 class CommitConflictError(RuntimeError):
@@ -311,6 +315,30 @@ def _apply_column_mapping(df: DataFrame, m: dict) -> DataFrame:
         if renames.get(name, name) not in {renames.get(c, c) for c in df.columns}:
             exprs.append(F_lit(v).alias(name))  # column exists nowhere yet
     return df.select(*exprs)
+
+
+def _join_on_part_dir(
+    spark: SparkSession, df: DataFrame, path_sql: str, dim_rows, col: str, ddl: str
+) -> DataFrame:
+    """Attach a per-partition manifest value as column `col` to each scanned
+    row, keyed by the row's partition dir — a broadcast of `dim_rows`
+    (manifest `path`, value) pairs, one per partition, never
+    data-proportional. `path_sql` is a file path as the scan reports it
+    (`_metadata.file_path`, or the table-relative `__file` derived from
+    it): it ends in `data/<dir>/<file>` and is URI-ENCODED (space → %20,
+    % → %25), while manifest paths are written raw. The dir is decoded to
+    compare like with like: url_decode is FORM decoding ('+' → space), so
+    literal '+' are escaped to %2B first, which makes it exact
+    percent-decoding. A row whose dir names no partition raises rather
+    than read as NULL."""
+    from erased_cells_spark.plans.tuning import local_df
+
+    dim = local_df(spark, dim_rows, f"__dir string, {col} {ddl}")
+    d = f"substring_index(substring_index({path_sql}, '/', -3), '/', 2)"
+    df = df.withColumn("__dir", F_expr(f"url_decode(replace({d}, '+', '%2B'))"))
+    df = df.join(F_broadcast(dim), "__dir", "left")
+    guard = f"coalesce({col}, raise_error(concat('no manifest partition owns ', __dir)))"
+    return df.withColumn(col, F_expr(guard)).drop("__dir")
 
 
 _PRUNE_OPS = {"<", "<=", ">", ">=", "=", "==", "in", "ranges"}
@@ -997,19 +1025,9 @@ class SnapshotTable:
             # (This is the one read path that resolves every group.)
             metas = self.manifest(snapshot_id)["partitions"]
             keys = list(metas)
-        paths = [os.path.join(self.path, metas[k]["path"]) for k in keys]
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
-        # merge-on-read POSITION (and scope='past' equality) deletes need
-        # each row's physical identity — attach it from the scan's hidden
-        # metadata BEFORE any projection
-        if self._needs_row_identity(snapshot_id):
-            df = df.select("*", *self._position_cols())
-        # schema evolution: surface written names under the snapshot's
-        # CURRENT names (renames coalesce across generations, drops vanish)
+        # column mapping (current names) and merge-on-read deletes apply
         # BEFORE the predicate filter, which speaks current names
-        df = _apply_column_mapping(df, self.column_mapping(snapshot_id))
-        # merge-on-read deletes: anti-join the snapshot's pending delete sets
-        df = self._apply_delete_files(spark, df, snapshot_id)
+        df = self._read_parts(spark, snapshot_id, [metas[k] for k in keys])
         if all_pruned:
             df = df.filter(F_lit(False))
         if where:
@@ -1018,43 +1036,42 @@ class SnapshotTable:
 
     def _tagged_read(self, spark: SparkSession) -> DataFrame:
         """CURRENT snapshot with a `__part` column = the owning partition's
-        lineage key (per-partition reads unioned by name, so add-column
-        schema evolution behaves like read())."""
-        from functools import reduce
-
-        man = self.current_manifest()
-        mapping = self.column_mapping()
-        pos_pending = self._needs_row_identity()
-        parts = []
-        for key, meta in man["partitions"].items():
-            df = spark.read.option("mergeSchema", "true").parquet(
-                os.path.join(self.path, meta["path"])
-            )
-            if pos_pending:
-                df = df.select("*", *self._position_cols())
-            df = _apply_column_mapping(df, mapping)
-            parts.append(df.withColumn("__part", F_lit(key)))
+        lineage key: ONE mergeSchema scan of every partition path, as read()
+        does (so add-column schema evolution behaves the same), each row
+        tagged through its file's partition dir."""
+        parts = self.current_manifest()["partitions"]
         if not parts:
             raise ValueError(f"empty snapshot table at {self.path}")
-        out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-        return self._apply_delete_files(spark, out)
+        paths = [os.path.join(self.path, m["path"]) for m in parts.values()]
+        df = spark.read.option("mergeSchema", "true").parquet(*paths)
+        if self._needs_row_identity():
+            df = df.select("*", *self._position_cols())
+        df = _join_on_part_dir(
+            spark, df, "_metadata.file_path",
+            [(m["path"], k) for k, m in parts.items()], "__part", "string",
+        )
+        df = _apply_column_mapping(df, self.column_mapping())
+        return self._apply_delete_files(spark, df).drop("__file", "__pos")
 
     # ----- incremental / CDC reads ------------------------------------------
     def _read_parts(
-        self, spark: SparkSession, snapshot_id: int, keys: list[str]
+        self, spark: SparkSession, snapshot_id: int | None, metas: list[dict]
     ) -> DataFrame | None:
-        """Visible rows of exactly `keys` partitions of a snapshot: raw files
-        → that snapshot's column mapping → its merge-on-read delete sets.
-        None when keys is empty (caller composes)."""
-        if not keys:
+        """Visible rows of exactly the partitions `metas` (their manifest
+        entries) of a snapshot: ONE mergeSchema scan of their files → that
+        snapshot's column mapping (written names surface under CURRENT
+        names) → its merge-on-read delete sets. Position and scope='past'
+        deletes need each row's physical identity, attached from the scan's
+        hidden metadata before any projection. None when metas is empty
+        (caller composes)."""
+        if not metas:
             return None
-        metas = self.manifest(snapshot_id)["partitions"]
-        paths = [os.path.join(self.path, metas[k]["path"]) for k in keys]
+        paths = [os.path.join(self.path, m["path"]) for m in metas]
         df = spark.read.option("mergeSchema", "true").parquet(*paths)
         if self._needs_row_identity(snapshot_id):
             df = df.select("*", *self._position_cols())
         df = _apply_column_mapping(df, self.column_mapping(snapshot_id))
-        return self._apply_delete_files(spark, df, snapshot_id)
+        return self._apply_delete_files(spark, df, snapshot_id).drop("__file", "__pos")
 
     def _remap_between(
         self, df: DataFrame, from_sid: int, to_sid: int, to_schema
@@ -1162,8 +1179,8 @@ class SnapshotTable:
             "scanned_from": len(from_keys),
             "mor_delta": mor_delta,
         }
-        a = self._read_parts(spark, to_sid, to_keys)
-        b = self._read_parts(spark, from_sid, from_keys)
+        a = self._read_parts(spark, to_sid, [pt[k] for k in to_keys])
+        b = self._read_parts(spark, from_sid, [pf[k] for k in from_keys])
         if a is None and b is None:
             empty = self.read(spark, to_sid).filter(F_lit(False)).limit(0)
             return {"appended": empty, "deleted": empty}
@@ -1325,39 +1342,57 @@ class SnapshotTable:
         self._require_no_pending_deletes("merge")
         upd = updates.withColumn("__lineage", F_col(lineage_col).cast("string")).cache()
         try:
-            n_upd = upd.count()
-            if n_upd == 0:
+            # ONE aggregate answers every pre-write question: per key its
+            # multiplicity and lineage, then per lineage the row count, the
+            # non-NULL key and lineage counts and the largest multiplicity
+            # of a non-NULL key (a NULL-key group is not a duplicate)
+            has_key = F_col(key_col).isNotNull()
+            per_lineage = (
+                upd.groupBy(key_col)
+                .agg(
+                    F_count("*").alias("c"),
+                    F_count("__lineage").alias("c_lin"),
+                    F_first("__lineage", ignorenulls=True).alias("__lineage"),
+                )
+                .groupBy("__lineage")
+                .agg(
+                    F_sum("c").alias("n"),
+                    F_sum(F_when(has_key, F_col("c")).otherwise(0)).alias("n_key"),
+                    F_sum("c_lin").alias("n_lin"),
+                    F_max(F_when(has_key, F_col("c")).otherwise(0)).alias("mult"),
+                )
+                .collect()
+            )
+            n = sum(r.n for r in per_lineage)
+            if n == 0:
                 return sid
-            chk = upd.agg(
-                F_count("*").alias("n"),
-                F_count(key_col).alias("n_key"),
-                F_count(lineage_col).alias("n_lin"),
-            ).collect()[0]
-            if chk.n_key < chk.n:
+            n_key = sum(r.n_key for r in per_lineage)
+            if n_key < n:
                 raise ValueError(
-                    f"merge: {chk.n - chk.n_key} NULL {key_col} values in updates — "
+                    f"merge: {n - n_key} NULL {key_col} values in updates — "
                     "a NULL key matches nothing in the anti-join and would land "
                     "as an unmatchable orphan row"
                 )
-            if chk.n_lin < chk.n:
+            n_lin = sum(r.n_lin for r in per_lineage)
+            if n_lin < n:
                 raise ValueError(
-                    f"merge: {chk.n - chk.n_lin} NULL {lineage_col} values in "
+                    f"merge: {n - n_lin} NULL {lineage_col} values in "
                     "updates — every upsert row must name an existing lineage "
                     "partition (a NULL lineage has no home partition)"
                 )
-            dups = (
-                upd.groupBy(key_col).count().filter("count > 1").limit(1).count()
-            )
-            if dups:
+            if max(r.mult for r in per_lineage) > 1:
                 raise ValueError(
                     f"merge: duplicate {key_col} values in updates — an upsert "
                     "batch must carry one row per key (pre-aggregate to the "
                     "latest row per key first)"
                 )
+            # keys are unique and non-NULL from here, so each key group's
+            # lineage is its one row's: update rows landing per lineage
+            landing = {r["__lineage"]: r.n for r in per_lineage}
             tagged = self._tagged_read(spark)
             keys = upd.select(key_col)
-            # matched old rows per partition + inserts per partition: two tiny
-            # aggregates drive the rewrite set and the conservation check
+            # old rows each partition loses to a matched key: with `landing`
+            # it drives the rewrite set and the conservation check
             matched = {
                 r["__part"]: r["n"]
                 for r in tagged.join(keys, key_col, "semi")
@@ -1365,13 +1400,9 @@ class SnapshotTable:
                 .agg(F_count("*").alias("n"))
                 .collect()
             }
-            inserts = {
-                r["__lineage"]: r["n"]
-                for r in upd.groupBy("__lineage").agg(F_count("*").alias("n")).collect()
-            }
-            rewrite = set(matched) | set(inserts)
+            rewrite = set(matched) | set(landing)
             expected = {
-                k: man["partitions"][k]["rows"] - matched.get(k, 0) + inserts.get(k, 0)
+                k: man["partitions"][k]["rows"] - matched.get(k, 0) + landing.get(k, 0)
                 for k in rewrite
                 if k in man["partitions"]
             }
@@ -1530,32 +1561,10 @@ class SnapshotTable:
         df = df.select("*", *self._position_cols())
         mapped = _apply_column_mapping(df, self.column_mapping())
         # visibility = current read semantics: existing equality AND
-        # position deletes apply before the predicate, so re-deleting an
-        # already-hidden row never double-records it — but we must KEEP the
-        # position identity through the anti-joins, so they are applied
-        # inline here rather than via _apply_delete_files (which drops them)
-        renames = self.column_mapping()["renames"]
-        if any(e.get("seq") is not None for e in self.delete_files()):
-            mapped = self._attach_seq(spark, mapped)
-        for entry in self.delete_files():
-            eff = renames.get(entry["key_col"], entry["key_col"])
-            keys = (
-                spark.read.parquet(os.path.join(self.path, entry["path"]))
-                .withColumnRenamed(entry["key_col"], eff)
-            )
-            if entry.get("seq") is not None:
-                keys = keys.withColumnRenamed(eff, "__delkey")
-                mapped = mapped.join(
-                    F_broadcast(keys),
-                    (F_col(eff) == F_col("__delkey"))
-                    & (F_col("__seq") <= F_lit(int(entry["seq"]))),
-                    "left_anti",
-                )
-            else:
-                mapped = mapped.join(F_broadcast(keys), eff, "left_anti")
-        for entry in self.position_delete_files():
-            prior = spark.read.parquet(os.path.join(self.path, entry["path"]))
-            mapped = mapped.join(F_broadcast(prior), ["__file", "__pos"], "left_anti")
+        # position deletes apply before the predicate (keeping the position
+        # identity), so re-deleting an already-hidden row never
+        # double-records it
+        mapped = self._apply_delete_files(spark, mapped)
         hits = mapped.filter(predicate).select("__file", "__pos")
         n = hits.count()
         if n == 0:
@@ -1579,31 +1588,6 @@ class SnapshotTable:
             e.get("seq") is not None for e in self.delete_files(snapshot_id)
         )
 
-    def _attach_seq(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        snapshot_id: int | None = None,
-        man_parts: dict | None = None,
-    ) -> DataFrame:
-        """Join each row's partition data-sequence as `__seq`, derived from
-        the hidden __file path (first two segments = the partition dir) via
-        a broadcast of the manifest's (dir, seq) map — metadata-scale, one
-        row per partition, never data-proportional. Pass `man_parts` to
-        source the map from an already-resolved manifest (branch reads)."""
-        if man_parts is None:
-            man_parts = self.manifest(snapshot_id)["partitions"]
-        from erased_cells_spark.plans.tuning import local_df
-
-        dim = local_df(
-            spark,
-            [(m["path"], int(m.get("seq", 0))) for m in man_parts.values()],
-            "__dir string, __seq long",
-        )
-        df = df.withColumn("__dir", F_expr("substring_index(__file, '/', 2)"))
-        df = df.join(F_broadcast(dim), "__dir", "left").drop("__dir")
-        return df.withColumn("__seq", F_coalesce(F_col("__seq"), F_lit(0)))
-
     def _apply_delete_files(
         self,
         spark: SparkSession,
@@ -1618,7 +1602,8 @@ class SnapshotTable:
         the entry's seq — data appended after the delete stays visible.
         Pass `man` (a resolved manifest dict carrying delete_files /
         position_delete_files / column_mapping / partitions) to apply a
-        BRANCH head's delete state instead of a main snapshot's."""
+        BRANCH head's delete state instead of a main snapshot's. The
+        (__file, __pos) identity columns stay on the result."""
         if man is None:
             dels = self.delete_files(snapshot_id)
             renames = self.column_mapping(snapshot_id)["renames"]
@@ -1635,7 +1620,14 @@ class SnapshotTable:
                     "internal: scope='past' deletes pending but the read did "
                     "not attach __file before projection"
                 )
-            df = self._attach_seq(spark, df, snapshot_id, man_parts=man_parts)
+            # each row's partition data-seq, from its file's partition dir
+            if man_parts is None:
+                man_parts = self.manifest(snapshot_id)["partitions"]
+            df = _join_on_part_dir(
+                spark, df, "__file",
+                [(m["path"], int(m.get("seq", 0))) for m in man_parts.values()],
+                "__seq", "long",
+            )
         for entry in dels:
             eff = renames.get(entry["key_col"], entry["key_col"])
             keys = (
@@ -1652,23 +1644,15 @@ class SnapshotTable:
                 )
             else:
                 df = df.join(F_broadcast(keys), eff, "left_anti")
-        if "__seq" in df.columns:
-            df = df.drop("__seq")
+        df = df.drop("__seq")
         if pos:
             if "__file" not in df.columns:
                 raise RuntimeError(
                     "internal: position deletes pending but the read did not "
                     "attach __file/__pos before projection"
                 )
-            from functools import reduce as _reduce
-
-            sets = [
-                spark.read.parquet(os.path.join(self.path, e["path"])) for e in pos
-            ]
-            allpos = _reduce(lambda a, b: a.unionByName(b), sets)
+            allpos = spark.read.parquet(*[os.path.join(self.path, e["path"]) for e in pos])
             df = df.join(F_broadcast(allpos), ["__file", "__pos"], "left_anti")
-        if "__file" in df.columns:
-            df = df.drop("__file", "__pos")
         return df
 
     def _require_no_pending_deletes(self, operation: str) -> None:
@@ -2164,7 +2148,7 @@ class SnapshotTable:
         if needs_identity:
             df = df.select("*", *self._position_cols())
         df = _apply_column_mapping(df, _normalize_mapping(man.get("column_mapping")))
-        df = self._apply_delete_files(spark, df, man=man)
+        df = self._apply_delete_files(spark, df, man=man).drop("__file", "__pos")
         if where:
             df = df.filter(_where_sql(where))
         return df

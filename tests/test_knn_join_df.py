@@ -196,7 +196,7 @@ class TestKnnJoinDf:
         with open(os.path.join(ckpt, "CURRENT")) as f:
             assert int(f.read()) >= 2
 
-    def test_jobs_do_not_scale_with_query_count(self, spark, pts, pts_local):
+    def test_jobs_do_not_scale_with_query_count(self, spark, spark_jobs, pts, pts_local):
         """The driver loop is over ROUNDS: 8× more queries must not run more
         Spark jobs per round (a per-query driver loop would). Jobs may differ
         by a few (ring start adapts to density), never by ~|queries|."""
@@ -212,15 +212,9 @@ class TestKnnJoinDf:
                     }
                 )
             )
-            sc = spark.sparkContext
-            group = f"knnjobs{n_queries}"
-            sc.setJobGroup(group, group)
-            try:
+            with spark_jobs() as jobs:
                 knn_join_df(pts, qdf, k=3, res=7, points_count=N).count()
-            finally:
-                sc.setJobGroup(None, None)
-            tracker = sc.statusTracker()
-            return len(tracker.getJobIdsForGroup(group))
+            return len(jobs)
 
         small = run(25)
         big = run(200)
@@ -228,7 +222,7 @@ class TestKnnJoinDf:
 
 
 class TestKnnDocsShape:
-    def test_local_query_side_arrow_off(self, spark, pts, pts_local):
+    def test_local_query_side_arrow_off(self, spark, spark_jobs, pts, pts_local):
         """knn_docs' call shape — a few literal queries with INT ids as a
         local_df — with Arrow off, Spark's default session setting:
         exact against knn_np, and within a fixed Spark job budget (the
@@ -241,19 +235,17 @@ class TestKnnDocsShape:
         key = "spark.sql.execution.arrow.pyspark.enabled"
         prev = spark.conf.get(key)
         spark.conf.set(key, "false")
-        sc = spark.sparkContext
-        sc.setJobGroup("knn_docs_shape", "knn_docs_shape")
         try:
-            qdf = local_df(
-                spark,
-                [(q["q_id"], q["lon"], q["lat"]) for q in _KNN_QUERIES],
-                "q_id INT, q_lon DOUBLE, q_lat DOUBLE",
-            )
-            rows = knn_join_df(pts, qdf, k=5, res=7).collect()
+            with spark_jobs() as job_ids:
+                qdf = local_df(
+                    spark,
+                    [(q["q_id"], q["lon"], q["lat"]) for q in _KNN_QUERIES],
+                    "q_id INT, q_lon DOUBLE, q_lat DOUBLE",
+                )
+                rows = knn_join_df(pts, qdf, k=5, res=7).collect()
         finally:
-            sc.setJobGroup(None, None)
             spark.conf.set(key, prev)
-        jobs = len(sc.statusTracker().getJobIdsForGroup("knn_docs_shape"))
+        jobs = len(job_ids)
         want = knn_np(
             pts_local.lon.to_numpy(), pts_local.lat.to_numpy(),
             pts_local.url.tolist(), _KNN_QUERIES, k=5,

@@ -154,6 +154,32 @@ class TestScopePast:
         assert table.delete_where_positions(spark, "doc_id = 5") == sid
 
 
+class TestPartitionDirNames:
+    """Lineage keys that the scan's URI-encoded file paths spell differently
+    from the manifest (space → %20, % → %25) or that form decoding would
+    misread ('+' → space) still map each row to its own partition."""
+
+    @pytest.mark.parametrize("key", ["c d", "c%d", "c+d"])
+    def test_scoped_delete_and_merge(self, spark, table, key):
+        def rows(lo, hi, tag, lineage):
+            return docs(spark, lo, hi, tag).withColumn("bucket", F.lit(lineage))
+
+        table.write_partitions(rows(0, 10, "v1", "ab"), "bucket", ["ab"])
+        table.delete_keys(spark, keys_df(spark, [3]), "doc_id", scope="past")
+        table.write_partitions(rows(3, 4, "v2", key), "bucket", [key])
+        got = vals(table, spark)
+        assert got[3] == "v2-3" and len(got) == 10  # the re-append is new data
+        table.apply_deletes(spark)
+        assert vals(table, spark) == got
+        upd = spark.createDataFrame(
+            [(3, key, "v3-3"), (20, key, "v3-20")], "doc_id LONG, bucket STRING, val STRING"
+        )
+        table.merge(spark, upd, key_col="doc_id", lineage_col="bucket")
+        got = vals(table, spark)
+        assert got[3] == "v3-3" and got[20] == "v3-20" and len(got) == 11
+        assert table.current_manifest()["partitions"][key]["rows"] == 2
+
+
 class TestSeqStamping:
     def test_metas_carry_seq_and_appends_advance_it(self, spark, table):
         table.write_partitions(docs(spark, 0, 5), "bucket", [0])

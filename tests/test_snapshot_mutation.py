@@ -105,6 +105,60 @@ class TestMerge:
         with pytest.raises(ValueError, match="duplicate"):
             table.merge(spark, upd, key_col="doc_id", lineage_col="bucket")
 
+    def test_duplicate_key_across_lineages_raises(self, spark, table):
+        write_base(spark, table)
+        upd = spark.createDataFrame(
+            [(5, 0, "a"), (5, 1, "b")], "doc_id LONG, bucket LONG, val STRING"
+        )
+        with pytest.raises(ValueError, match="duplicate"):
+            table.merge(spark, upd, key_col="doc_id", lineage_col="bucket")
+
+    def test_null_key_outranks_duplicate(self, spark, table):
+        """A batch that is wrong in several ways names the NULL key first."""
+        write_base(spark, table)
+        upd = spark.createDataFrame(
+            [(None, 0, "x"), (5, 0, "a"), (5, 0, "b")],
+            "doc_id LONG, bucket LONG, val STRING",
+        )
+        with pytest.raises(ValueError, match="1 NULL doc_id"):
+            table.merge(spark, upd, key_col="doc_id", lineage_col="bucket")
+
+    def test_merge_after_add_column(self, spark, table):
+        """Partitions written before a column existed read it as its
+        add_column default (or NULL without one) through a merge, beside a
+        partition that carries real values."""
+        write_base(spark, table)
+        table.add_column("score", default=-1)
+        post = docs_df(spark, 500).filter("bucket = 4").select(
+            "*", (F.col("doc_id") * 2).alias("score"), F.lit("t").alias("tag")
+        )
+        table.write_partitions(post, "bucket", [4])
+        upd = spark.createDataFrame(
+            [(5, 0, "NEW-5", 50), (450, 4, "NEW-450", 51), (1000, 1, "NEW-1000", 52)],
+            "doc_id LONG, bucket LONG, val STRING, score LONG",
+        )
+        table.merge(spark, upd, key_col="doc_id", lineage_col="bucket")
+        got = {r.doc_id: (r.val, r.score, r.tag) for r in table.read(spark).collect()}
+        assert len(got) == 501
+        assert got[5] == ("NEW-5", 50, None) and got[1000] == ("NEW-1000", 52, None)
+        assert got[6] == ("v1-6", -1, None)  # old row of a rewritten partition
+        assert got[250] == ("v1-250", -1, None)  # untouched partition
+        assert got[451] == ("v1-451", 902, "t") and got[450] == ("NEW-450", 51, None)
+
+    def test_job_budget(self, spark, spark_jobs, table):
+        """One aggregate over the batch answers every pre-write check and
+        the table is read in one scan: a merge runs at most 12 Spark jobs
+        (batch aggregate 3, schema 1, matched-rows collect 4, write 4)."""
+        write_base(spark, table)
+        upd = spark.createDataFrame(
+            [(5, 0, "NEW-5"), (150, 1, "NEW-150"), (1000, 3, "NEW-1000")],
+            "doc_id LONG, bucket LONG, val STRING",
+        )
+        with spark_jobs() as jobs:
+            table.merge(spark, upd, key_col="doc_id", lineage_col="bucket")
+        assert len(jobs) <= 12, len(jobs)
+        assert table.read(spark).count() == 401
+
     def test_insert_into_unknown_partition_raises(self, spark, table):
         write_base(spark, table)
         upd = spark.createDataFrame([(9999, 42, "x")], "doc_id LONG, bucket LONG, val STRING")
@@ -149,6 +203,15 @@ class TestDeleteWhere:
         assert back.count() == 300
         assert table.current_manifest()["partitions"]["2"]["rows"] == 0
         assert set(back.columns) == {"doc_id", "bucket", "val"}
+
+    def test_job_budget(self, spark, spark_jobs, table):
+        """One schema job for the whole table, not one per partition: a
+        delete_where runs at most 6 Spark jobs."""
+        write_base(spark, table)
+        with spark_jobs() as jobs:
+            table.delete_where(spark, "doc_id % 7 = 0")
+        assert len(jobs) <= 6, len(jobs)
+        assert table.read(spark).count() == 342
 
     def test_time_travel_across_delete(self, spark, table):
         sid0 = write_base(spark, table)
